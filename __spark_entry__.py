@@ -182,16 +182,30 @@ def _ordered(mapping: dict) -> dict:
     return out
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+def _registered(attr: str) -> dict:
+    """Merge one registry (QUERIES or ORACLES) over every module; a name
+    registered by two modules is an error, never a silent overwrite."""
+    out: dict = {}
+    owner: dict[str, str] = {}
     for mod in _all_modules():
-        for name, fn in mod.QUERIES.items():
-            out[name] = (lambda f: lambda spark, sf_dir: (_ship(spark), f(spark, sf_dir))[1])(fn)
+        for name, v in getattr(mod, attr).items():
+            if name in owner:
+                raise ValueError(
+                    f"{attr} name {name!r} registered twice: "
+                    f"{owner[name]} and {mod.__name__}"
+                )
+            owner[name] = mod.__name__
+            out[name] = v
+    return out
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    out = {
+        name: (lambda f: lambda spark, sf_dir: (_ship(spark), f(spark, sf_dir))[1])(fn)
+        for name, fn in _registered("QUERIES").items()
+    }
     return _ordered(out)
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for mod in _all_modules():
-        out.update(mod.ORACLES)
-    return _ordered(out)
+    return _ordered(_registered("ORACLES"))

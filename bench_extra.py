@@ -5,7 +5,10 @@ headline query in isolation with the noop sink, reports plan-build vs
 execution time, Spark job/stage counts per action, and dumps
 explain("formatted") to plans/r08/.
 
-Usage: python bench_extra.py [q1 q3 ...]   (default: all)
+Usage: python bench_extra.py [q1 q5 ...]   (default: all)
+
+Each argument selects the queries whose name starts with it, so ``q5``
+runs q5a-q5c.
 """
 
 from __future__ import annotations
@@ -51,7 +54,7 @@ def main() -> None:
     results = {}
 
     def profile(name, build, action, repeats=3):
-        if which and name.split("_")[0] not in which and name not in which:
+        if which and not any(name.startswith(w) for w in which):
             return
         best = None
         for r in range(repeats):

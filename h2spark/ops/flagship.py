@@ -7,6 +7,18 @@ media span interleaved), runs the real flattened-extraction kernel
 explodes the resulting span sequence. The DuckDB oracle enumerates the
 expected (kind, text, media_ref, order) rows — 4 per document — so the
 driver's gate checks the complete north_rule invariant per row.
+
+The result is ordered by (doc_id, ord) without an ``orderBy`` on the
+kernel output. A global sort puts a range exchange above the kernel,
+and its RangePartitioner first runs a sampling job over the whole
+child stage — the kernel included — so every document was parsed
+twice (a plan-node count cannot see this: the kernel appears once in
+the plan). Instead the raw ``documents`` scan is range-partitioned on
+doc_id before the span structs are built; the kernel, the explode and
+the projections keep every row in its partition, so a
+``sortWithinPartitions`` leaves the collected rows globally ordered.
+One exchange, carrying each byte once, and the sample reads a parquet
+scan instead of re-running the kernel.
 """
 
 from __future__ import annotations
@@ -75,17 +87,21 @@ def docs_to_interleaved_spans(d: DataFrame) -> DataFrame:
 
 def q_flagship_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from h2spark.pipeline.kernel import extract_spans_arrow
-    from h2spark.pipeline.salting import ensure_min_parallelism
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # r8: (a) spread the kernel over every core — the sf documents
-    # table is one row group, so without this the whole extraction ran
-    # in ONE scan task (no-op at scale, see ensure_min_parallelism);
-    # the raw text is shuffled BEFORE the span structs are built so the
-    # exchange carries each byte once
-    d = ensure_min_parallelism(d)
+    # The one exchange: range-partition the raw scan on doc_id (see the
+    # module docstring). Partition count = max(defaultParallelism, scan
+    # splits): the sf documents table is one row group, i.e. ONE scan
+    # task, so the floor spreads the kernel over every core; at scale
+    # the scan's own split count wins and the kernel never gets fewer
+    # tasks than the scan had. The count is explicit because AQE
+    # coalesces a no-count repartitionByRange by bytes, which need not
+    # keep the floor; an explicit count is never coalesced. .rdd on a
+    # bare parquet scan is pure planning, no job.
+    n = max(spark.sparkContext.defaultParallelism, d.rdd.getNumPartitions())
+    d = d.repartitionByRange(n, "doc_id")
     docs = d.select("doc_id", docs_to_interleaved_spans(d))
-    # r8: (b) mapInArrow kernel instead of the scalar pandas UDF — the
+    # r8: mapInArrow kernel instead of the scalar pandas UDF — the
     # Arrow->pandas materialization of the nested spans input cost ~1.7x
     # the whole kernel stage (interleaved A/B, BENCH.md r8); rows are
     # bit-identical (pinned by the oracle hash)
@@ -105,7 +121,9 @@ def q_flagship_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s.media_ref").alias("media_ref"),
             F.col("s.order").cast("long").alias("ord"),
         )
-        .orderBy("doc_id", "ord")
+        # partitions are doc_id ranges in order: sorting each one
+        # orders the whole result
+        .sortWithinPartitions("doc_id", "ord")
     )
 
 

@@ -1,7 +1,7 @@
 """h2spark.pipeline — the PySpark layer.
 
 Spec -> StructType compilation, vectorized pandas-UDF extraction
-kernels, span reassembly, size-bucket salted repartitioning, checkpoint
+kernels, span reassembly, per-document hashed repartitioning, checkpoint
 manifests + resume, and the end-to-end job entry point.
 """
 

@@ -6,7 +6,7 @@ The Spark lifecycle of one run (SURVEY.md §3.3 "Spark lifecycle"):
     read input (hint-shaped spans table)
       -> with_ckpt_bucket (pure-hash bucket id)
       -> anti-join completed manifests           [resume]
-      -> salted repartition on size buckets      [skew]
+      -> salted repartition, one key per doc     [skew]
       -> extract UDF (Arrow-batched pandas)      [the kernel]
       -> write parquet partitionBy(ckpt_bucket), dynamic overwrite
       -> read-back stats per bucket -> commit manifests atomically

@@ -1,20 +1,23 @@
-"""Size-bucket salted repartitioning — the skew defense (SURVEY.md §4.2).
+"""Per-document hashed repartitioning — the skew defense (SURVEY.md §4.2).
 
 Long-tail HTML skew: document cost is roughly linear in HTML bytes, and
 web corpora are log-normal — a handful of documents are 100-1000x the
-median. A plain hash repartition on doc_id gives every task the same
-*count* of documents but wildly different *bytes*; stragglers dominate
-wall-clock. AQE's skew-join splitting doesn't apply (the extraction is a
-map stage, not a join).
+median. AQE's skew-join splitting doesn't apply (the extraction is a
+map stage, not a join), so the balance has to come from the partition
+key.
 
-Fix: derive ``size_bucket = floor(log2(doc_bytes))`` and a salt that is
-a **pure function of doc_id** (xxhash64 — never rand(), so re-runs and
-resumes are deterministic), then repartition on (size_bucket, salt).
-Equal-log2-size documents spread uniformly over tasks; no task gets two
-whales by accident.
+Fix: the key is ``salt = xxhash64(doc_id)``, a **pure function of
+doc_id** (never rand(), so re-runs and resumes are deterministic) with
+one distinct value per document. Every document then lands on a task
+independently of every other, so each task's byte load is a sum over
+~N/n independent documents and concentrates near the mean (law of large
+numbers over documents); no task gets two whales except by the same
+chance as any other pair.
 
-All Spark-side: F.aggregate over the span array for doc_bytes (no UDF,
-stays in codegen), xxhash64 for the salt.
+``doc_bytes``/``size_bucket`` (with_doc_stats) ride along for manifest
+metrics and monitoring; the key does not use them. All Spark-side:
+F.aggregate over the span array for doc_bytes (no UDF, stays in
+codegen), xxhash64 for the key.
 """
 
 from __future__ import annotations
@@ -44,13 +47,6 @@ def with_doc_stats(df: DataFrame, spans_col: str = "spans") -> DataFrame:
     )
 
 
-def with_salt(df: DataFrame, doc_id_col: str = "doc_id", n_salts: int = 64) -> DataFrame:
-    """Deterministic salt: pmod(xxhash64(doc_id), n_salts)."""
-    return df.withColumn(
-        "salt", F.pmod(F.xxhash64(F.col(doc_id_col)), F.lit(n_salts)).cast("int")
-    )
-
-
 def ensure_min_parallelism(
     df: DataFrame, key_col: str = "doc_id", min_parts: int | None = None
 ) -> DataFrame:
@@ -64,9 +60,9 @@ def ensure_min_parallelism(
     every sf). At production scale the scan already has thousands of
     splits and this is a NO-OP — the partition-count check is what
     keeps the extra exchange from ever touching a corpus-sized input.
-    The repartition key is the deterministic salted hash of ``key_col``
-    (same rationale as :func:`salted_repartition`: ~32 keys per target
-    partition, reproducible across runs).
+    The repartition key is ``xxhash64(key_col)``, one value per row
+    (same rationale as :func:`salted_repartition`: balanced over rows,
+    reproducible across runs).
     """
     sc = df.sparkSession.sparkContext
     n = min_parts or sc.defaultParallelism
@@ -79,8 +75,7 @@ def ensure_min_parallelism(
     # .rdd on an exchange-free scan plan is pure planning, no job
     if df.rdd.getNumPartitions() >= n:
         return df
-    key = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n * 32)).cast("int")
-    return df.repartition(n, key)
+    return df.repartition(n, F.xxhash64(F.col(key_col)))
 
 
 def _is_scan_shaped(df: DataFrame) -> bool:
@@ -106,25 +101,24 @@ def salted_repartition(
     n_partitions: int,
     doc_id_col: str = "doc_id",
     spans_col: str = "spans",
-    granularity: int = 32,
 ) -> DataFrame:
     """Deterministic skew-defusing repartition.
 
-    Partition key = pmod(xxhash64(doc_id), n_partitions * granularity):
-    a pure hash of doc_id (reproducible across runs and cluster sizes),
-    but with ``granularity`` distinct keys per target partition. Coarse
-    keys (one per partition) put whole key-groups on single tasks, and
-    hash collisions stack them — measured 11x doc-count imbalance at
-    64 partitions. With ~32 keys per partition the per-partition load
-    is an average of 32 samples, so both doc-count and byte imbalance
-    concentrate near 1 (law of large numbers), and whale documents
-    spread independently of the small ones.
+    Partition key = ``salt`` = xxhash64(doc_id): a pure hash of doc_id
+    (reproducible across runs and cluster sizes) with one distinct key
+    per document. A coarser key (e.g. pmod(hash, n * 32), 32 keys per
+    partition) makes the per-partition load a sum over only ~32 key
+    groups, which hash onto the partitions with a relative error of
+    about sqrt(32)/32 — measured max/median bytes 1.35 at 4 partitions,
+    and worse on a resume wave where only a quarter of the keys occur.
+    With per-document keys the load is a sum over ~N/n documents and
+    concentrates near the mean, and whale documents spread
+    independently of the small ones.
 
-    ``size_bucket``/``doc_bytes`` columns are retained for manifest
-    metrics and monitoring (with_doc_stats); the salt itself no longer
-    needs them. A single document can never be split — the residual
-    worst case is one whale per task, which is the floor any
-    row-partitioned engine has.
+    ``salt``, ``size_bucket`` and ``doc_bytes`` columns are retained for
+    manifest metrics and monitoring (with_doc_stats). A single document
+    can never be split — the residual worst case is one whale per task,
+    which is the floor any row-partitioned engine has.
 
     r8: ``n_partitions`` is the CAP, not always the exact count. When
     the input's optimizer size estimate is known (parquet scans) and
@@ -160,7 +154,5 @@ def salted_repartition(
             n_partitions,
             max(dp, -(-size // _TARGET_KERNEL_TASK_BYTES)),
         )
-    key = F.pmod(
-        F.xxhash64(F.col(doc_id_col)), F.lit(n_eff * granularity)
-    ).cast("int")
-    return df.withColumn("salt", key).repartition(n_eff, F.col("salt"))
+    salt = F.xxhash64(F.col(doc_id_col))
+    return df.withColumn("salt", salt).repartition(n_eff, F.col("salt"))

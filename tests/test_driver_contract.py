@@ -38,3 +38,18 @@ def test_query_against_oracle(spark, name):
     else:
         # rows-only contract for non-SQL-expressible ops
         assert fn(spark, SF_DIR).count() > 0
+
+
+def test_duplicate_registration_is_rejected(monkeypatch):
+    import types
+
+    real = entrymod._all_modules()
+    taken = next(iter(real[0].ORACLES))  # registered as query and oracle
+    dup = types.ModuleType("planted_duplicate")
+    dup.QUERIES = {taken: lambda spark, sf_dir: None}
+    dup.ORACLES = {taken: "SELECT 1"}
+    monkeypatch.setattr(entrymod, "_all_modules", lambda: (*real, dup))
+    with pytest.raises(ValueError, match="registered twice"):
+        entrymod.queries()
+    with pytest.raises(ValueError, match="registered twice"):
+        entrymod.oracle_sql()
